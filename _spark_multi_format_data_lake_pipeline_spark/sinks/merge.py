@@ -36,11 +36,16 @@ Python model. On a real cluster the statement analyzes/executes untouched.
 
 from __future__ import annotations
 
+import threading
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 KEY_CANDIDATES = ("id", "product_id", "sku", "code", "_id")
+
+# guards the fixed ``source_changes`` temp view of the W2 SQL path, which
+# every merge in the session would otherwise share
+_SOURCE_VIEW_LOCK = threading.Lock()
 
 
 def merge_sql_statement(target: str, key: str, source_view: str = "source_changes") -> str:
@@ -93,12 +98,15 @@ class TableMerger:
 
     # -- W2 -----------------------------------------------------------------
     def _merge_sql(self, df: DataFrame, target: str, key: str) -> None:
-        """Reference utils/merge_utils.py:70-82 (needs Iceberg/Delta)."""
-        df.createOrReplaceTempView("source_changes")
-        try:
-            self.spark.sql(merge_sql_statement(target, key))
-        finally:
-            self.spark.catalog.dropTempView("source_changes")
+        """Reference utils/merge_utils.py:70-82 (needs Iceberg/Delta).
+        The statement reads the session-wide ``source_changes`` view, so
+        merges in one process take turns on it."""
+        with _SOURCE_VIEW_LOCK:
+            df.createOrReplaceTempView("source_changes")
+            try:
+                self.spark.sql(merge_sql_statement(target, key))
+            finally:
+                self.spark.catalog.dropTempView("source_changes")
 
     def _merge_antijoin(self, df: DataFrame, target: str, key: str) -> None:
         """Jar-free upsert: keep unmatched target rows, take all source
@@ -123,23 +131,15 @@ class TableMerger:
 
     # -- W3 -----------------------------------------------------------------
     def _insert_overwrite(self, df: DataFrame, target: str) -> None:
-        """Reference utils/merge_utils.py:84-93."""
-        df.createOrReplaceTempView("source_data")
-        try:
-            self.spark.sql(f"INSERT OVERWRITE TABLE {target} SELECT * FROM source_data")
-        finally:
-            self.spark.catalog.dropTempView("source_data")
+        """Reference utils/merge_utils.py:84-93 (``INSERT OVERWRITE TABLE
+        target SELECT * FROM source``: columns match by position)."""
+        df.write.insertInto(target, overwrite=True)
 
     # -- W4 -----------------------------------------------------------------
     def _create_table(self, df: DataFrame, target: str) -> None:
-        """Reference utils/merge_utils.py:95-105 (CTAS)."""
-        df.createOrReplaceTempView("source_data")
-        try:
-            self.spark.sql(
-                f"CREATE TABLE {target} USING parquet AS SELECT * FROM source_data"
-            )
-        finally:
-            self.spark.catalog.dropTempView("source_data")
+        """Reference utils/merge_utils.py:95-105 (CTAS ``USING parquet``;
+        fails if the target exists)."""
+        df.write.format("parquet").saveAsTable(target)
 
     # -- W2/W3/W4 on the versioned plane --------------------------------------
     def _merge_versioned(

@@ -104,6 +104,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import threading
 import uuid
 from pathlib import Path
 
@@ -115,6 +116,7 @@ class ConcurrentCommitError(RuntimeError):
 
 
 _SIDE_JOB_POOL = None
+_SIDE_JOB_POOL_LOCK = threading.Lock()
 
 
 def _side_job_pool():
@@ -124,17 +126,22 @@ def _side_job_pool():
     scheduler runs concurrent driver jobs fine (guide §2.6: actions are
     only sequential because the driver calls them sequentially); a
     shared pool keeps the py4j-pinned JVM thread count bounded instead
-    of leaking one per commit.  Two workers suffice: no commit ever has
-    more than one side job in flight, and commit paths never nest pool
-    submissions (no deadlock)."""
+    of leaking one per commit.  Created once, under a lock: commits on
+    several driver threads (``write_tables`` and ``run_merge`` run their
+    per-table commits concurrently) can ask for it at the same time.
+    Two workers bound the pool, not the commits: a commit has at most
+    one side job in flight, concurrent commits queue theirs, and a side
+    job never submits to the pool itself, so waiting commits cannot
+    deadlock."""
     global _SIDE_JOB_POOL
-    if _SIDE_JOB_POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
+    with _SIDE_JOB_POOL_LOCK:
+        if _SIDE_JOB_POOL is None:
+            from concurrent.futures import ThreadPoolExecutor
 
-        _SIDE_JOB_POOL = ThreadPoolExecutor(
-            max_workers=2, thread_name_prefix="versioned-side-job"
-        )
-    return _SIDE_JOB_POOL
+            _SIDE_JOB_POOL = ThreadPoolExecutor(
+                max_workers=2, thread_name_prefix="versioned-side-job"
+            )
+        return _SIDE_JOB_POOL
 
 
 def _manifest_dir(path: str) -> Path:

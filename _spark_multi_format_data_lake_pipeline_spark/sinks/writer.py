@@ -19,6 +19,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import SparkSession
 
 from ..catalog import CatalogManager
+from ..parallel import map_tables
 from ..registry import TableHandle
 
 
@@ -37,6 +38,11 @@ def write_tables(
 ) -> dict[str, int]:
     """W1 (reference utils/spark_write_iceberg.py:10-84): drop+recreate the
     database, then write each registry table. Returns {table: rows}.
+
+    The tables are written concurrently on both planes
+    (``parallel.map_tables``, width ``defaultParallelism``).  The result
+    keeps the handles' order; a failing table raises after the writes
+    already running finish, as a one-at-a-time loop would raise.
 
     ``max_records_per_file`` caps file size at write time (the other half
     of the small-files problem that sinks/maintenance.py compaction fixes
@@ -87,8 +93,8 @@ def write_tables(
                     prior[name] = versioned.resolve(name)
                 else:
                     versioned.unregister(name)
-        results = {}
-        for h in handles:
+
+        def write_one(h: TableHandle) -> int:
             name = f"{database}.{h.name}".lower()
             exists = versioned.exists(name)
             if exists and not recreate_database:
@@ -101,8 +107,7 @@ def write_tables(
                         f"{mode!r}"
                     )
                 if mode == "ignore":
-                    results[h.name] = 0
-                    continue
+                    return 0
             path = prior.get(name) or (
                 versioned.resolve(name)
                 if exists
@@ -120,35 +125,46 @@ def write_tables(
                 max_records_per_file=max_records_per_file,
             )
             versioned.register(name, path, replace=True)
-            results[h.name] = h.row_count
-        return results
-    cat = CatalogManager(spark)
-    if recreate_database:
-        cat.drop_database(database)
-    cat.create_database(database)
+            return h.row_count
 
-    results: dict[str, int] = {}
+    else:
+        cat = CatalogManager(spark)
+        if recreate_database:
+            cat.drop_database(database)
+        cat.create_database(database)
+
+        def write_one(h: TableHandle) -> int:
+            writer = h.df.write.mode(mode).format(table_format)
+            cols = (partition_by or {}).get(h.name)
+            if cols:
+                writer = writer.partitionBy(*cols)
+            bucket_spec = (bucket_by or {}).get(h.name)
+            if bucket_spec:
+                # bucketed+sorted layout: equal-bucket joins/aggregations on
+                # these keys skip the shuffle entirely — the 100 TB co-location
+                # strategy for repeatedly-joined fact tables
+                n_buckets, bcols = bucket_spec
+                writer = writer.bucketBy(n_buckets, *bcols).sortBy(*bcols)
+            if max_records_per_file:
+                writer = writer.option("maxRecordsPerFile", max_records_per_file)
+            if table_format == "iceberg":
+                writer = writer.option("format-version", "2")  # reference :57
+            for k, v in (extra_options or {}).items():
+                writer = writer.option(k, v)
+            writer.saveAsTable(f"{database}.{h.name}")
+            return h.row_count
+
+    # handles naming the same table (table names are case-insensitive)
+    # write one after another, in sweep order, so the last one wins as in
+    # a one-at-a-time loop; distinct tables write concurrently
+    same_table: dict[str, list[TableHandle]] = {}
     for h in handles:
-        writer = h.df.write.mode(mode).format(table_format)
-        cols = (partition_by or {}).get(h.name)
-        if cols:
-            writer = writer.partitionBy(*cols)
-        bucket_spec = (bucket_by or {}).get(h.name)
-        if bucket_spec:
-            # bucketed+sorted layout: equal-bucket joins/aggregations on
-            # these keys skip the shuffle entirely — the 100 TB co-location
-            # strategy for repeatedly-joined fact tables
-            n_buckets, bcols = bucket_spec
-            writer = writer.bucketBy(n_buckets, *bcols).sortBy(*bcols)
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        if table_format == "iceberg":
-            writer = writer.option("format-version", "2")  # reference :57
-        for k, v in (extra_options or {}).items():
-            writer = writer.option(k, v)
-        writer.saveAsTable(f"{database}.{h.name}")
-        results[h.name] = h.row_count
-    return results
+        same_table.setdefault(h.name.lower(), []).append(h)
+    written = map_tables(
+        spark, lambda hs: [(h.name, write_one(h)) for h in hs], same_table.values()
+    )
+    rows = dict(pair for pairs in written for pair in pairs)
+    return {h.name: rows[h.name] for h in handles}
 
 
 def verify_tables(
@@ -161,15 +177,18 @@ def verify_tables(
     """F9 (reference utils/spark_write_iceberg.py:88-132): SHOW TABLES →
     per-table sample + count. Returns {table: {rows, columns, sample}}.
     With ``versioned`` set the enumeration and reads union the
-    versioned-table registry (names there resolve through it)."""
+    versioned-table registry (names there resolve through it).  The
+    tables are checked concurrently (``parallel.map_tables``); the report
+    keeps the listing order."""
     cat = CatalogManager(spark, versioned=versioned)
     names = list(table_names) if table_names else cat.list_tables(database)
-    report: dict[str, dict] = {}
-    for t in names:
+
+    def verify_one(t: str) -> dict:
         df = cat.table(f"{database}.{t}")
-        report[t] = {
+        return {
             "rows": df.count(),
             "columns": df.columns,
             "sample": [r.asDict() for r in df.limit(sample_rows).collect()],
         }
-    return report
+
+    return dict(zip(names, map_tables(spark, verify_one, names)))

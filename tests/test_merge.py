@@ -617,3 +617,54 @@ def test_versioned_catalog_legacy_mixed_case_migration(tmp_path):
     vc.unregister("old.style")
     assert not vc.exists("Old.Style")
     assert vc.list_tables("old") == []
+
+
+def test_concurrent_overwrite_and_ctas_each_land_their_own_source(
+    spark, cat, monkeypatch
+):
+    """W3 and W4 used to stage their source in one fixed session temp
+    view, so two merges on different threads could read each other's
+    rows.  Each target must hold exactly its own source, even when SQL
+    statements are slow to start."""
+    import threading
+    import time
+
+    m = TableMerger(spark)
+    real_sql = spark.sql
+
+    def slow_sql(*a, **k):
+        time.sleep(0.2)
+        return real_sql(*a, **k)
+
+    monkeypatch.setattr(m.spark, "sql", slow_sql)
+    rounds = 4
+    nokey = lambda rows: spark.createDataFrame(rows, "name string, qty int")  # noqa: E731
+    for r in range(rounds):
+        nokey([("seed", 0)]).write.saveAsTable(f"{DB}.ow{r}")
+    a = nokey([("a", i) for i in range(3)])
+    b = nokey([("b", i) for i in range(5)])
+    barrier = threading.Barrier(2, timeout=60)
+    errors: list[BaseException] = []
+
+    def run(df, target, exists):
+        try:
+            for r in range(rounds):
+                barrier.wait()
+                m.merge_table(df, target.format(r), exists)
+        except BaseException as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+            barrier.abort()
+
+    threads = [
+        threading.Thread(target=run, args=(a, f"{DB}.ow{{}}", True)),
+        threading.Thread(target=run, args=(b, f"{DB}.ctas{{}}", False)),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    for r in range(rounds):
+        assert sorted(spark.table(f"{DB}.ow{r}").collect()) == sorted(a.collect())
+        assert sorted(spark.table(f"{DB}.ctas{r}").collect()) == sorted(b.collect())

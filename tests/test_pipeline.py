@@ -3,13 +3,21 @@ sink + winnowing fingerprints."""
 
 from __future__ import annotations
 
+import time
 import uuid
+import zipfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from _spark_multi_format_data_lake_pipeline_spark.catalog import CatalogManager
 from _spark_multi_format_data_lake_pipeline_spark.llm.dedup import winnowing_fingerprints
+from _spark_multi_format_data_lake_pipeline_spark.parallel import map_tables
+from _spark_multi_format_data_lake_pipeline_spark.registry import TableHandle
+from _spark_multi_format_data_lake_pipeline_spark.sinks import writer
+from _spark_multi_format_data_lake_pipeline_spark.sources import readers
 from _spark_multi_format_data_lake_pipeline_spark.pipeline import run_ingestion, run_merge
 from _spark_multi_format_data_lake_pipeline_spark.streaming.events import read_event_stream
 from _spark_multi_format_data_lake_pipeline_spark.streaming.sinks import stream_upsert_sink
@@ -154,3 +162,118 @@ def test_ingestion_lands_on_versioned_plane(spark, tmp_path, dbs):
                   create_versioned=True)
     assert r["json_items"]["strategy"] == "CREATE_TABLE"
     assert vc.exists(f"{src_db}_t.json_items")
+
+
+def _mixed_lake(base):
+    """Eight files over every swept folder, more than a 4-core host has
+    cores; ``json/bad.json`` is one whole-file corrupt record."""
+    for d in ("json", "csv", "parquet", "docx"):
+        (base / d).mkdir(parents=True)
+    (base / "json" / "a.json").write_text('[{"id": 1, "v": "a"}, {"id": 2, "v": "b"}]')
+    (base / "json" / "b.json").write_text(
+        '[{"id": 10, "w": 1.5}, {"id": 11, "w": 2.5}, {"id": 12, "w": 3.5}]'
+    )
+    (base / "json" / "bad.json").write_text('{"id": 1, "v": ')
+    (base / "csv" / "c.csv").write_text("id,note\n1,x\n2,y\n")
+    (base / "csv" / "d.csv").write_text("name,qty\nfoo,1\nbar,2\nbaz,3\n")
+    pq.write_table(
+        pa.table({"sku": [1, 2, 3, 4], "price": [1.0, 2.0, 3.0, 4.0]}),
+        base / "parquet" / "p.parquet",
+    )
+    body = "".join(f"<w:p><w:r><w:t>{t}</w:t></w:r></w:p>" for t in ("first", "second"))
+    with zipfile.ZipFile(base / "docx" / "memo.docx", "w") as z:
+        z.writestr("word/document.xml", f"<w:document><w:body>{body}</w:body></w:document>")
+    (base / "docx" / "notes.txt").write_text("one\ntwo\nthree\n")
+    return base
+
+
+# sweep order (folders, then sorted files), the corrupt json.bad left out
+MIXED_ROWS = {
+    "json_a": 2, "json_b": 3, "csv_c": 2, "csv_d": 3,
+    "parquet_p": 4, "text_memo": 2, "text_notes": 3,
+}
+
+
+def _serial_map(spark, fn, items):
+    return [fn(x) for x in items]
+
+
+def test_concurrent_ingestion_and_merge_match_serial(spark, tmp_path, dbs, monkeypatch):
+    """The concurrent sweep, writes and verification report exactly what
+    the one-at-a-time loops report, in the same order; the corrupt file
+    stays isolated; run_merge returns list_tables order with the right
+    strategy and row count per table."""
+    src_db, dst_db = dbs
+    base = _mixed_lake(tmp_path / "lake")
+    rep = run_ingestion(spark, base, database=src_db)
+    with monkeypatch.context() as m:
+        for mod in (readers, writer):
+            m.setattr(mod, "map_tables", _serial_map)
+        ref = run_ingestion(spark, base, database=dst_db)
+
+    assert [h.name for h in rep.tables] == [h.name for h in ref.tables] == list(MIXED_ROWS)
+    assert list(rep.written.items()) == list(ref.written.items()) == list(MIXED_ROWS.items())
+    assert list(rep.verification.items()) == list(ref.verification.items())
+    assert {t: v["rows"] for t, v in rep.verification.items()} == MIXED_ROWS
+    assert rep.total_rows == sum(MIXED_ROWS.values())
+
+    CatalogManager(spark).drop_database(dst_db)
+    order = CatalogManager(spark).list_tables(src_db)
+    r1 = run_merge(spark, src_db, dst_db)
+    assert list(r1) == order
+    assert {t: (r["strategy"], r["final_rows"]) for t, r in r1.items()} == {
+        t: ("CREATE_TABLE", n) for t, n in MIXED_ROWS.items()
+    }
+    r2 = run_merge(spark, src_db, dst_db)
+    assert list(r2) == order
+    no_key = {"csv_d", "text_memo", "text_notes"}
+    assert {t: (r["strategy"], r["final_rows"]) for t, r in r2.items()} == {
+        t: ("INSERT_OVERWRITE" if t in no_key else "MERGE", n) for t, n in MIXED_ROWS.items()
+    }
+
+
+def test_write_tables_failing_handle_raises_and_others_land(spark, dbs):
+    db, _ = dbs
+    good = [
+        TableHandle(spark.range(n), f"t{n}", "PARQUET", n, 1) for n in (1, 2, 3)
+    ]
+    # last in input order: every other write has started before it runs
+    bad = TableHandle(spark.range(1), "bad name", "PARQUET", 1, 1)
+    with pytest.raises(Exception, match="bad name|PARSE"):
+        writer.write_tables(spark, good + [bad], database=db)
+    assert {h.name: spark.table(f"{db}.{h.name}").count() for h in good} == {
+        "t1": 1, "t2": 2, "t3": 3
+    }
+
+
+def test_write_tables_same_name_last_handle_wins(spark, dbs):
+    """memo.docx and memo.txt both land as text_memo: writes of one table
+    stay in sweep order, so the later handle wins, as in a serial loop."""
+    db, _ = dbs
+    handles = [
+        TableHandle(spark.range(n), name, "TEXT", n, 1)
+        for n, name in ((1, "text_memo"), (2, "other"), (3, "text_memo"))
+    ]
+    assert writer.write_tables(spark, handles, database=db) == {"text_memo": 3, "other": 2}
+    assert spark.table(f"{db}.text_memo").count() == 3
+
+
+def test_map_tables_keeps_order_and_raises_first_failure_in_input_order(spark):
+    n = 3 * spark.sparkContext.defaultParallelism
+
+    def slow_square(i):
+        time.sleep(0.01 * ((n - i) % 4))
+        return i * i
+
+    assert map_tables(spark, slow_square, range(n)) == [i * i for i in range(n)]
+
+    def fail_two(i):
+        if i == 1:
+            time.sleep(0.05)  # fails after item 2 has failed
+        if i in (1, 2):
+            raise ValueError(str(i))
+        return i
+
+    with pytest.raises(ValueError, match="^1$"):
+        map_tables(spark, fail_two, range(n))
+    assert map_tables(spark, slow_square, []) == []

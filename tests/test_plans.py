@@ -363,3 +363,54 @@ def test_no_single_partition_funnel_in_fact_sized_paths(spark, sf_dir, name):
     n_single = plan.count("Exchange SinglePartition")
     allowed = 1 if name == "q177_ranking_metrics" else 0
     assert n_single <= allowed, f"{name}: {n_single} single-partition exchanges"
+
+
+# Spark jobs for run_ingestion + run_merge over _budget_lake: per file a
+# read (schema inference) and a count, with the corrupt-bearing XML file's
+# total and corrupt counts folded into one aggregation; per table a write
+# and a verification count + sample; per merge a source count, a CTAS and
+# a final count.  Any extra action in these layers breaks the budget.
+INGEST_MERGE_JOB_BUDGET = 49
+
+
+def _budget_lake(base):
+    for d in ("json", "csv", "xml", "docx"):
+        (base / d).mkdir(parents=True)
+    (base / "json" / "items.json").write_text('[{"id": 1, "v": "a"}, {"id": 2, "v": "b"}]')
+    (base / "json" / "bad.json").write_text('{"id": 1, "v": ')
+    (base / "csv" / "notes.csv").write_text("id,note\n1,hello\n2,world\n")
+    # one malformed row: the table keeps a _corrupt_record column to strip
+    (base / "xml" / "rows.xml").write_text(
+        "<rows><row><id>1</id><v>a</v></row><row><id>2</id><v>b</v></row>"
+        "<row><id>3<v>c</row></rows>"
+    )
+    (base / "docx" / "memo.txt").write_text("one\ntwo\n")
+    return base
+
+
+def test_ingest_merge_job_budget(spark, tmp_path):
+    """The reference job on a fixed tiny lake runs an exact number of Spark
+    jobs.  The jobs are counted by job group, and the per-file and
+    per-table loops submit from pool threads, so the count also shows that
+    the caller's local properties reach those threads."""
+    import uuid
+
+    from _spark_multi_format_data_lake_pipeline_spark.catalog import CatalogManager
+    from _spark_multi_format_data_lake_pipeline_spark.pipeline import run_ingestion, run_merge
+
+    base = _budget_lake(tmp_path / "lake")
+    tag = uuid.uuid4().hex[:6]
+    src, dst, group = f"budget_src_{tag}", f"budget_dst_{tag}", f"budget-{tag}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "ingest+merge job budget")
+    try:
+        rep = run_ingestion(spark, base, database=src)
+        merged = run_merge(spark, src, dst)
+    finally:
+        sc._jsc.clearJobGroup()
+        for db in (src, dst):
+            CatalogManager(spark).drop_database(db)
+    assert rep.written == {"json_items": 2, "csv_notes": 2, "text_memo": 2, "xml_rows": 2}
+    assert {r["strategy"] for r in merged.values()} == {"CREATE_TABLE"}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == INGEST_MERGE_JOB_BUDGET

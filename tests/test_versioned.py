@@ -6696,3 +6696,44 @@ def test_stream_offset_in_vacuum_interior_gap_refuses(spark, tmp_path):
             rows.extend(item.to_pylist() if hasattr(item, "to_pylist") else [item])
     got = sorted(d["id"] for d in rows)
     assert got == [2, 3, 4, 5], "diff vs the surviving base delivers v3..v6 files once"
+
+
+def test_side_job_pool_is_created_once_under_concurrent_first_use(monkeypatch):
+    """Concurrent versioned commits (write_tables and run_merge run their
+    per-table commits on several threads) can ask for the shared side-job
+    pool at the same moment; they must all get the same pool."""
+    import concurrent.futures
+    import sys
+    import threading
+    import time
+
+    from _spark_multi_format_data_lake_pipeline_spark.sinks import versioned as V
+
+    class SlowPool(concurrent.futures.ThreadPoolExecutor):
+        def __init__(self, *a, **k):
+            time.sleep(0.02)  # widen the check-then-create window
+            super().__init__(*a, **k)
+
+    monkeypatch.setattr(V, "_SIDE_JOB_POOL", None)
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", SlowPool)
+    barrier = threading.Barrier(8, timeout=60)
+    got = []
+
+    def grab():
+        barrier.wait()
+        got.append(V._side_job_pool())
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=grab) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 8
+    assert len({id(p) for p in got}) == 1
+    got[0].shutdown()
