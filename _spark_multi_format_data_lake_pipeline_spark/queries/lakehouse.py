@@ -2438,7 +2438,8 @@ def q277_versioned_stream_change_feed(
     versioned_upsert(chg, t, ["o_orderkey"])  # v3
     versioned_delete(spark, t, "o_orderkey % 7 = 0", strategy="dv")  # v4
     drain_versioned_changes(
-        spark, t, out, ckpt, extra_options={"readChangeFeed": "true"}
+        spark, t, out, ckpt, extra_options={"readChangeFeed": "true"},
+        engine="stream",
     )
     return spark.read.schema(
         "o_orderkey bigint, o_totalprice double, _change_type string, "

@@ -1002,6 +1002,75 @@ def _write_snapshot(
     df: DataFrame,
     path: str,
     mode: str,
+    *,
+    cdf_feed=None,  # DataFrame, or an already-submitted Future[list]
+    cdf_cmap: dict | None = None,
+    **kw,
+) -> int:
+    """Every versioned write's entry point (the body is
+    ``_snapshot_commit``).  A change feed handed as a FRAME is written
+    by a concurrent side job: its parquet write is independent of the
+    snapshot write (disjoint output dirs, shared pinned inputs), so one
+    commit pays max(feed, snapshot) wall-clock instead of feed +
+    snapshot (guide §2.6 overlapping independent jobs), and the body
+    joins it right before the manifest needs the file list.  A caller
+    with eager work of its own between building the feed and
+    committing (the row-id chain) submits the side job early and hands
+    the Future down.  Callers pass either ``cdf_files`` (already
+    written) or ``cdf_feed``, never both.  If the commit fails, the
+    side job is cancelled, or joined and its output deleted, before
+    the error propagates (``_discard_side_job``)."""
+    if mode not in (
+        "append",
+        "overwrite",
+        "compact",
+        "upsert",
+        "delete",
+        "update",
+    ):
+        raise ValueError(f"versioned snapshot write: unknown mode {mode!r}")
+    if cdf_feed is not None and kw.get("cdf_files") is not None:
+        raise ValueError(
+            "_write_snapshot: pass cdf_files or cdf_feed, not both"
+        )
+    from concurrent.futures import Future
+
+    fut = (
+        _side_job_pool().submit(
+            _write_cdf, cdf_feed, path, dict(cdf_cmap or {})
+        )
+        if cdf_feed is not None and not isinstance(cdf_feed, Future)
+        else cdf_feed
+    )
+    try:
+        return _snapshot_commit(df, path, mode, cdf_future=fut, **kw)
+    except BaseException:
+        _discard_side_job(fut, path)
+        raise
+
+
+def _discard_side_job(fut, path: str) -> None:
+    """A commit failed after submitting its change-feed side job: cancel
+    the job if it has not started, else wait for it — so no Spark job
+    outlives the failed commit — and delete the ``_change_data`` dir it
+    wrote, which no manifest will reference.  The job's own error is
+    swallowed: the commit's error is the one the caller re-raises."""
+    if fut is None or fut.cancel():
+        return
+    try:
+        files = fut.result()
+    except Exception:
+        return  # _write_cdf removes its own partial output
+    import shutil
+
+    for d in {Path(f).parts[:2] for f in files}:
+        shutil.rmtree(Path(path).joinpath(*d), ignore_errors=True)
+
+
+def _snapshot_commit(
+    df: DataFrame,
+    path: str,
+    mode: str,
     txn_id: str | None = None,
     partition_by: list[str] | None = None,
     carry_files: list[str] | None = None,
@@ -1015,8 +1084,7 @@ def _write_snapshot(
     read_range: tuple | None = None,
     content_independent: bool = False,
     cdf_files: list[str] | None = None,
-    cdf_feed=None,  # DataFrame, or an already-submitted Future[list]
-    cdf_cmap: dict | None = None,
+    cdf_future=None,
     ndv_by: list[str] | None = None,
     row_ids_consumed: int = 0,
     max_records_per_file: int | None = None,
@@ -1051,40 +1119,6 @@ def _write_snapshot(
     min/max zone maps prune nothing.  Inherited like the partition
     spec; attached here (the single write choke point) so compaction,
     CDC applies and streaming appends can never drop the layout."""
-    if mode not in (
-        "append",
-        "overwrite",
-        "compact",
-        "upsert",
-        "delete",
-        "update",
-    ):
-        raise ValueError(f"versioned snapshot write: unknown mode {mode!r}")
-    # CDF feed handed as a FRAME: its parquet write is independent of the
-    # snapshot write (disjoint output dirs, shared pinned inputs), so it
-    # runs as a concurrent side job and is joined right before the
-    # manifest needs the file list — one commit pays max(feed, snapshot)
-    # wall-clock instead of feed + snapshot (guide §2.6 overlapping
-    # independent jobs).  Callers pass either cdf_files (already
-    # written) or cdf_feed, never both.
-    cdf_future = None
-    if cdf_feed is not None:
-        if cdf_files is not None:
-            raise ValueError(
-                "_write_snapshot: pass cdf_files or cdf_feed, not both"
-            )
-        from concurrent.futures import Future
-
-        # a caller that has eager work of its own between building the
-        # feed and committing (the row-id chain) submits the side job
-        # early and hands the Future down
-        cdf_future = (
-            cdf_feed
-            if isinstance(cdf_feed, Future)
-            else _side_job_pool().submit(
-                _write_cdf, cdf_feed, path, dict(cdf_cmap or {})
-            )
-        )
     vs = versions(path)
     prev = (
         _read_manifest(path, vs[-1])
@@ -4703,12 +4737,14 @@ def _delete_with_vectors(
     )
     dv_rel = f"_deletes/{uuid.uuid4().hex}"
     cdf_files = None
+    cdf_fut = None
     try:
         # the feed write and the (file, pos) DV write are independent
         # jobs over the SAME pinned matched set — run them concurrently
         # (guide §2.6): the commit pays max(feed, dv) instead of
         # feed + dv.  try/finally so the pin never outlives the verb
-        # even when a write raises.
+        # even when a write raises, and the feed job never outlives a
+        # failed DV write.
         cdf_fut = (
             _side_job_pool().submit(
                 _write_cdf,
@@ -4724,6 +4760,9 @@ def _delete_with_vectors(
         matched.write.mode("error").parquet(str(Path(path) / dv_rel))
         if cdf_fut is not None:
             cdf_files = cdf_fut.result()
+    except BaseException:
+        _discard_side_job(cdf_fut, path)
+        raise
     finally:
         if pinned is not None:
             pinned.unpersist()
@@ -5328,42 +5367,46 @@ def _apply_changes_commit(
         else None
     )
     rid_consumed = 0
-    if track:
-        # carried rows keep id + commit version (not logically
-        # modified); updated rows inherit the replaced row's id but
-        # re-stamp their version; inserted keys draw fresh ids past the
-        # watermark — exactly versioned_upsert's contract.  The id map
-        # is its own candidate-file read consumed by BOTH the id-
-        # assignment count and the snapshot write — pin it (narrow:
-        # keys + two longs) so the candidate files are read once here.
-        cur_ids = (
-            cur.select(*keys, _ROWID_COL, _ROWCV_COL)
-            .groupBy(*keys)
-            .agg(
-                F.min(_ROWID_COL).alias(_ROWID_COL),
-                F.min(_ROWCV_COL).alias("__cv0"),
+    try:
+        if track:
+            # carried rows keep id + commit version (not logically
+            # modified); updated rows inherit the replaced row's id but
+            # re-stamp their version; inserted keys draw fresh ids past the
+            # watermark — exactly versioned_upsert's contract.  The id map
+            # is its own candidate-file read consumed by BOTH the id-
+            # assignment count and the snapshot write — pin it (narrow:
+            # keys + two longs) so the candidate files are read once here.
+            cur_ids = (
+                cur.select(*keys, _ROWID_COL, _ROWCV_COL)
+                .groupBy(*keys)
+                .agg(
+                    F.min(_ROWID_COL).alias(_ROWID_COL),
+                    F.min(_ROWCV_COL).alias("__cv0"),
+                )
             )
-        )
-        if pin is not None:
-            cur_ids = pin(cur_ids)
-        outi = (
-            out.join(cur_ids, keys, "left")
-            .withColumn(
-                _ROWCV_COL,
-                F.when(F.col("__act") == "carry", F.col("__cv0")).cast(
-                    "long"
-                ),
+            if pin is not None:
+                cur_ids = pin(cur_ids)
+            outi = (
+                out.join(cur_ids, keys, "left")
+                .withColumn(
+                    _ROWCV_COL,
+                    F.when(F.col("__act") == "carry", F.col("__cv0")).cast(
+                        "long"
+                    ),
+                )
+                .drop("__cv0", "__act")
             )
-            .drop("__cv0", "__act")
-        )
-        ins, rid_consumed = _assign_fresh_row_ids(
-            outi.filter(F.col(_ROWID_COL).isNull()).drop(_ROWID_COL),
-            keys,
-            int(m.get("row_id_high_water") or 0),
-        )
-        out = outi.filter(F.col(_ROWID_COL).isNotNull()).unionByName(
-            ins, allowMissingColumns=True
-        )
+            ins, rid_consumed = _assign_fresh_row_ids(
+                outi.filter(F.col(_ROWID_COL).isNull()).drop(_ROWID_COL),
+                keys,
+                int(m.get("row_id_high_water") or 0),
+            )
+            out = outi.filter(F.col(_ROWID_COL).isNotNull()).unionByName(
+                ins, allowMissingColumns=True
+            )
+    except BaseException:
+        _discard_side_job(cdf_fut, path)
+        raise
     return _write_snapshot(
         out,
         path,
@@ -5934,7 +5977,13 @@ def _write_cdf(feed: DataFrame, path: str, cmap: dict) -> list[str]:
             ]
         )
     rel_dir = f"_change_data/{uuid.uuid4().hex}"
-    feed.write.mode("error").parquet(str(Path(path) / rel_dir))
+    try:
+        feed.write.mode("error").parquet(str(Path(path) / rel_dir))
+    except BaseException:
+        import shutil
+
+        shutil.rmtree(Path(path) / rel_dir, ignore_errors=True)
+        raise
     return sorted(
         str(p.relative_to(path))
         for p in (Path(path) / rel_dir).rglob("*.parquet")

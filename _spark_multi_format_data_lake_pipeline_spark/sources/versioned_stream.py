@@ -82,7 +82,10 @@ so a capped stream drains exactly one capped batch per availableNow
 run (re-run to continue — each run picks up where the checkpoint
 left off); use a running ``processingTime`` trigger to drain a whole
 backlog under the cap in one query, as Delta's admission-control
-integration would.
+integration would.  ``drain_versioned_changes`` runs that query only
+when the call needs the stream (a cap, ``build``, other reader
+options); otherwise it drains appends or the change feed with batch
+reads through the same cursor (its ``engine`` parameter).
 
 Partition-column handling matches the batch reader: values are parsed
 from the Hive path through the COMMITTED schema (never re-inferred) and
@@ -1302,24 +1305,33 @@ def _drain_batch(
     max_files: int | None,
     max_bytes: int | None,
     skip_change: bool,
+    change_feed: bool,
     max_runs: int,
 ) -> int:
-    """The BATCH engine of ``drain_versioned_changes``: capped append
-    slices written to ``sink_path`` as SLICE-KEYED files through the
-    shared cursor — each slice lands under deterministic names
+    """The BATCH engine of ``drain_versioned_changes``: slices written
+    to ``sink_path`` as SLICE-KEYED files through the shared cursor —
+    each slice lands under deterministic names
     (``slice-v<from>-v<to>-<i>``) after deleting any same-slice
     leftovers, so a crash between write and cursor advance re-runs the
     slice into the same names and converges (idempotent), matching the
     stream engine's end-to-end exactly-once without its per-run JVM
-    startup.  ``build`` must be a stateless per-row/projection
+    startup.  Append slices are planned by ``_plan_append_slice`` and
+    read from the new data files; ``change_feed`` slices are planned by
+    ``_plan_feed_slice`` and read with ``read_change_feed`` — the
+    replication batch engine's path — so no row crosses the Python
+    worker.  A slice with no rows advances the cursor and lands
+    nothing.  ``build`` must be a stateless per-row/projection
     transform (the same restriction foreachBatch imposes)."""
-    from pyspark.sql import functions as F
+    from functools import reduce
 
-    from ..sinks.versioned import _read_files, read_version
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from ..sinks.versioned import _read_files, read_change_feed, read_version
 
     cur_dir = Path(checkpoint) / "_vc_cursor"
 
-    def _write_slice(df, lo: int, hi: int) -> None:
+    def _write_slice(df, lo: int, hi: int) -> bool:
         if build is not None:
             df = build(df)
         # leftovers clear by START version only: a crash before the
@@ -1328,19 +1340,22 @@ def _drain_batch(
         # crashed attempt's files as duplicates — any file starting at
         # lo+1 is an attempt at THIS slice (ranges partition the
         # version axis as the cursor advances)
-        _land_slice(
-            df,
-            sink_path,
-            sink_format,
-            f"slice-v{lo + 1:06d}-v{hi:06d}-",
-            clear_glob=f"slice-v{lo + 1:06d}-v*",
+        return bool(
+            _land_slice(
+                df,
+                sink_path,
+                sink_format,
+                f"slice-v{lo + 1:06d}-v{hi:06d}-",
+                clear_glob=f"slice-v{lo + 1:06d}-v*",
+            )
         )
 
-    def _align(df, fields, cmap: dict, head_cmap: dict):
+    def _align(df, fields, m: dict, head_cmap: dict):
         # resolve through PHYSICAL column identity (stable across
         # renames), exactly like the streaming reader: a pre-rename
         # file's column lands under the head's logical name instead of
         # silently reading NULL
+        cmap = dict(m.get("column_mapping") or {})
         phys_to_local = {cmap.get(c, c): c for c in df.columns}
         sel = []
         for f in fields:
@@ -1359,9 +1374,7 @@ def _drain_batch(
             return runs
         tgt = vs[-1]
         cur = _cursor_read(cur_dir / "cursor.json")
-        if cur is not None and (
-            cur.get("file_index") is not None or cur.get("snapshot_start")
-        ):
+        if _partial_offset(cur):
             # a capped STREAM drain left a PARTIAL offset: the sink
             # already holds part of that commit as flat stream files,
             # so a commit-granular re-delivery would duplicate rows —
@@ -1377,8 +1390,6 @@ def _drain_batch(
             return runs
         # emit every slice under the HEAD commit's visible schema (the
         # field-list vintage a fresh stream would declare)
-        from pyspark.sql.types import StructType
-
         hm = _read_manifest(path, vs[-1])
         head_cmap = dict(hm.get("column_mapping") or {})
         fields = StructType.fromJson(
@@ -1386,22 +1397,24 @@ def _drain_batch(
                 **hm["schema"],
                 "fields": _visible_fields(
                     hm["schema"], bool(hm.get("bucket_by"))
-                ),
+                )
+                + (_CDF_FIELDS if change_feed else []),
             }
         ).fields
         if lo == 0 and vs[0] > 1:
             # fresh drain of an ever-vacuumed table: the earliest
-            # surviving snapshot is the initial load
+            # surviving snapshot is the initial load (inserts at its
+            # version in change-feed mode, as the stream serves it)
+            snap = read_version(spark, path, vs[0])
+            if change_feed:
+                snap = snap.withColumn(
+                    "_change_type", F.lit("insert")
+                ).withColumn("_commit_version", F.lit(vs[0]).cast("long"))
             em = _read_manifest(path, vs[0])
-            snap = _align(
-                read_version(spark, path, vs[0]),
-                fields,
-                dict(em.get("column_mapping") or {}),
-                head_cmap,
+            runs += _write_slice(
+                _align(snap, fields, em, head_cmap), 0, vs[0]
             )
-            _write_slice(snap, 0, vs[0])
             _cursor_advance(cur_dir, vs[0])
-            runs += 1
             continue
         if 0 < lo and lo not in vs:
             # a cursor whose own manifest was vacuumed — below the
@@ -1415,30 +1428,49 @@ def _drain_batch(
                 f"{path} — the delivered prefix is unreconstructable; "
                 "restart from a fresh checkpoint"
             )
-        hi, cms = _plan_append_slice(
-            path, lo, tgt, vs, max_files, max_bytes, skip_change
-        )
-        if not cms:
-            _cursor_advance(cur_dir, hi)
-            continue
-        frames = [
-            _align(
-                _read_files(spark, path, new, m),
-                fields,
-                dict(m.get("column_mapping") or {}),
-                head_cmap,
+        if change_feed:
+            hi, n_files = _plan_feed_slice(
+                path, lo, tgt, vs, max_files, max_bytes,
+                "drain_versioned_changes",
             )
-            for _v, m, new in cms
-            if new
-        ]
-        from functools import reduce
-
-        _write_slice(reduce(lambda a, b: a.unionByName(b), frames), lo, hi)
+            df = (
+                _align(
+                    read_change_feed(spark, path, lo, hi),
+                    fields,
+                    _read_manifest(path, hi),
+                    head_cmap,
+                )
+                if n_files
+                else None  # compact/metadata-only commits: no rows
+            )
+        else:
+            hi, cms = _plan_append_slice(
+                path, lo, tgt, vs, max_files, max_bytes, skip_change
+            )
+            frames = [
+                _align(_read_files(spark, path, new, m), fields, m, head_cmap)
+                for _v, m, new in cms
+                if new
+            ]
+            df = (
+                reduce(lambda a, b: a.unionByName(b), frames)
+                if frames
+                else None
+            )
+        if df is not None:
+            runs += _write_slice(df, lo, hi)
         _cursor_advance(cur_dir, hi)
-        runs += 1
     raise RuntimeError(
         f"drain_versioned_changes: backlog at {path} not drained in "
         f"{max_runs} slices (cap too small for the commit rate?)"
+    )
+
+
+def _partial_offset(cur: dict | None) -> bool:
+    """A cursor a capped STREAM drain left inside a commit (or inside
+    the bootstrap snapshot) — only the stream engine can finish it."""
+    return cur is not None and bool(
+        cur.get("file_index") is not None or cur.get("snapshot_start")
     )
 
 
@@ -1456,52 +1488,81 @@ def drain_versioned_changes(
     skip_change_commits: bool = False,
     max_runs: int = 10000,
     extra_options: dict | None = None,
-    engine: str = "stream",
+    engine: str = "auto",
 ) -> int:
-    """Drain a versioned table's FULL backlog under a rate cap in one
-    call — the semantics Delta gives ``trigger(availableNow=True)``
-    under admission control.  The Python DataSource API exposes no
-    availableNow hook (one availableNow run of a capped
-    ``versioned_changes`` stream delivers exactly ONE capped
-    micro-batch — module docstring), so the stream engine runs ONE
-    continuously-triggered micro-batch query against the checkpoint
-    and blocks until the stream has caught up to the table head
-    (``processAllAvailable``): every batch stays bounded by the cap
-    AND the call returns only when the backlog as of the run's start
-    is fully delivered — exactly-once end to end through the engine
-    checkpoint, with the same batch ids (and therefore the same
-    batch-keyed sink slice names) the pre-r16 availableNow-per-batch
-    loop produced, for one JVM query startup instead of one per batch.
+    """Drain a versioned table's FULL backlog into ``sink_path`` in one
+    call — under a rate cap if asked, the semantics Delta gives
+    ``trigger(availableNow=True)`` under admission control.  Exactly
+    once end to end: every delivered slice lands under deterministic
+    slice-keyed file names, and the call returns only when the backlog
+    as of the run's start is delivered.  Returns the number of
+    micro-batches / slices that landed at least one row.
+    ``extra_options`` are ``versioned_changes`` reader options;
+    ``{"readChangeFeed": "true"}`` drains the change feed (insert /
+    update_preimage / update_postimage / delete rows plus
+    ``_change_type`` and ``_commit_version``) instead of appends.
 
-    ``build`` (optional) maps the streaming DataFrame before the sink —
-    projections/filters, same restrictions as any streaming query.
-    Returns the number of micro-batches that delivered data.  Progress
-    is detected from the run's committed end offset; a run that
-    neither delivers rows nor advances the offset while the head is
-    unreached raises instead of spinning (that state is unreachable
-    short of a concurrent vacuum breaking replay — which
-    ``partitions`` reports with its own honest error on the next run).
+    ``engine`` picks the execution engine:
 
-    ``engine="batch"`` (r16) drains the same backlog as capped APPEND
-    SLICES through the same cursor file, writing each slice to
-    ``sink_path`` under deterministic slice-keyed file names (crash →
-    same-name rewrite → converges) — no JVM streaming-query startup
-    per capped batch, for bulk backfills.  Caps close at COMMIT
-    granularity there (the streaming engine remains the sub-commit
-    splitter), ``output_mode`` must be ``append``, ``extra_options``
-    are not supported, and ``build`` must be a stateless
-    projection/filter (the foreachBatch restriction, now load-bearing).
-    The default stays ``"stream"`` — the engine-faithful
-    admission-control demonstrator; both engines share the cursor, so
-    a batch backfill can hand over to a streaming tail (the batch run
-    clears the Spark checkpoint's engine state and the stream reader
-    starts AT the cursor)."""
-    if engine not in ("stream", "batch"):
+    - ``"stream"`` — ONE continuously-triggered micro-batch query over
+      the ``versioned_changes`` streaming source against the
+      checkpoint, blocking until the stream has caught up to the table
+      head (``processAllAvailable``).  The Python DataSource API
+      exposes no availableNow hook (one availableNow run of a capped
+      stream delivers exactly ONE capped micro-batch — module
+      docstring), so this is the one-query form of the pre-r16
+      availableNow-per-batch loop, with the same batch ids and
+      batch-keyed slice names.  The only engine that splits a commit
+      into sub-commit batches under ``max_files_per_trigger`` /
+      ``max_bytes_per_trigger``, applies ``build`` to the streaming
+      frame, honours a non-append ``output_mode`` and passes any
+      ``extra_options`` to the reader.  A run that neither delivers
+      rows nor advances the offset while the head is unreached raises
+      instead of spinning.
+    - ``"batch"`` (r16) — the same backlog as slices through the same
+      cursor file (``_drain_batch``): append slices from the commits'
+      new data files, or, with ``readChangeFeed``, ``read_change_feed``
+      slices — no JVM streaming-query startup and no row through the
+      Python DataSource worker.  Caps close at COMMIT granularity (a
+      single commit larger than the cap forms one slice),
+      ``output_mode`` must be ``append``, ``extra_options`` may only
+      be ``readChangeFeed``, and ``build`` must be a stateless
+      projection/filter (the foreachBatch restriction, load-bearing
+      here).  The return value counts slices that landed rows.
+    - ``"auto"`` (default) — ``batch`` when the call asks for nothing
+      only the stream gives: no rate cap, no ``build``,
+      ``output_mode="append"``, ``extra_options`` empty or exactly
+      ``readChangeFeed=true``, and no partial streaming offset left in
+      the checkpoint by a capped stream drain; ``stream`` otherwise.
+
+    Both engines drive the SAME cursor file, so they interleave
+    safely: a batch run also clears the Spark streaming checkpoint's
+    engine state (the cursor supersedes it), and the stream reader
+    starts AT the cursor."""
+    if engine not in ("auto", "stream", "batch"):
         raise ValueError(
-            "drain_versioned_changes: engine must be 'stream' or "
-            f"'batch', got {engine!r}"
+            "drain_versioned_changes: engine must be one of "
+            f"auto/stream/batch, got {engine!r}"
         )
     _refuse_metadata_sink(sink_path)
+    # reader options are case-insensitive, like the streaming source's
+    opts = {
+        str(k).lower(): str(v).lower()
+        for k, v in (extra_options or {}).items()
+    }
+    batch_opts = opts in ({}, {"readchangefeed": "true"})
+    cur_file = Path(checkpoint) / "_vc_cursor" / "cursor.json"
+    if engine == "auto":
+        engine = (
+            "batch"
+            if batch_opts
+            and max_files_per_trigger is None
+            and max_bytes_per_trigger is None
+            and build is None
+            and output_mode == "append"
+            and not _partial_offset(_cursor_read(cur_file))
+            else "stream"
+        )
     if engine == "batch":
         if output_mode != "append":
             raise ValueError(
@@ -1509,10 +1570,17 @@ def drain_versioned_changes(
                 "append-mode only (stateful output modes need the "
                 "streaming engine)"
             )
-        if extra_options:
+        if not batch_opts:
             raise ValueError(
-                "drain_versioned_changes: extra_options are streaming-"
-                "reader options — use engine='stream' with them"
+                "drain_versioned_changes: extra_options other than "
+                "readChangeFeed are streaming-reader options — use "
+                "engine='stream' with them"
+            )
+        if opts and skip_change_commits:
+            raise ValueError(
+                "drain_versioned_changes: readChangeFeed and "
+                "skip_change_commits are contradictory — one demands "
+                "row changes, the other ignores them"
             )
         runs = _drain_batch(
             spark,
@@ -1524,6 +1592,7 @@ def drain_versioned_changes(
             max_files=max_files_per_trigger,
             max_bytes=max_bytes_per_trigger,
             skip_change=skip_change_commits,
+            change_feed=bool(opts),
             max_runs=max_runs,
         )
         _wipe_engine_checkpoint(checkpoint)
@@ -1570,14 +1639,14 @@ def drain_versioned_changes(
     def _land(batch_df, batch_id):
         # No isEmpty() pre-flight: that was a SECOND job per batch
         # through the Python DS read (guide §1.2 — the write itself
-        # proves emptiness: an all-empty-task parquet write lands zero
-        # part files).  Batch offsets are deterministic, so a batch
-        # that lands nothing now landed nothing in every earlier
-        # attempt too — the slice-keyed clear inside _land_slice is a
-        # no-op for it.  Counting by BATCH ID instead of a bare
-        # counter keeps the returned count exact when a stop() races a
-        # mid-flight batch and the outer loop's next query replays it
-        # (the slice rewrite is idempotent; the count must be too).
+        # proves emptiness: _land_slice counts the rows its part files
+        # hold and lands nothing for a 0-row batch).  Batch offsets are
+        # deterministic, so a batch that lands nothing now landed
+        # nothing in every earlier attempt too.  Counting by BATCH ID
+        # instead of a bare counter keeps the returned count exact when
+        # a stop() races a mid-flight batch and the outer loop's next
+        # query replays it (the slice rewrite is idempotent; the count
+        # must be too).
         if _land_slice(
             batch_df,
             sink_path,
@@ -1761,16 +1830,18 @@ def _land_slice(
     """Land one drained slice in the sink under DETERMINISTIC file
     names: write to a temp dir, delete leftovers matching
     ``clear_glob`` (default: same-prefix files — a previous attempt's
-    partial slice), then move each file to ``<prefix><i><ext>``.  A
-    replay of the same slice — batch-engine re-run after a crash, or a
-    foreachBatch batch replay — rewrites the same names and converges:
-    sink-side exactly-once without a ``_spark_metadata`` transaction
-    log (whose presence makes batch reads IGNORE files the log doesn't
-    list — the reason both drain engines share this layout instead of
-    the streaming file sink).  Returns the number of files landed — 0
-    means the slice was empty (an all-empty-task write emits no part
-    files), which the stream sink uses instead of a separate
-    ``isEmpty()`` job."""
+    partial slice), then move each file that holds rows to
+    ``<prefix><i><ext>``.  A replay of the same slice — batch-engine
+    re-run after a crash, or a foreachBatch batch replay — rewrites the
+    same names and converges: sink-side exactly-once without a
+    ``_spark_metadata`` transaction log (whose presence makes batch
+    reads IGNORE files the log doesn't list — the reason both drain
+    engines share this layout instead of the streaming file sink).
+    Returns the number of files landed.  A slice is empty when its
+    files hold no ROWS (an all-empty-task parquet write still emits
+    one 0-row part file): it clears nothing, lands nothing and returns
+    0, which the stream sink uses instead of a separate ``isEmpty()``
+    job."""
     import os as _os
     import shutil
     import uuid as _uuid
@@ -1778,17 +1849,35 @@ def _land_slice(
     tmp = Path(sink_path) / f"_tmp-slice-{_uuid.uuid4().hex}"
     df.write.format(sink_format).mode("overwrite").save(str(tmp))
     dst = Path(sink_path)
-    for old in dst.glob(clear_glob or (prefix + "*")):
-        old.unlink()
     outs = sorted(
         p
         for p in tmp.iterdir()
-        if p.is_file() and not p.name.startswith(("_", "."))
+        if p.is_file()
+        and not p.name.startswith(("_", "."))
+        and _has_rows(p, sink_format)
     )
+    if outs:
+        for old in dst.glob(clear_glob or (prefix + "*")):
+            old.unlink()
     for i, f in enumerate(outs):
         _os.replace(f, dst / f"{prefix}{i:04d}{f.suffix}")
     shutil.rmtree(tmp, ignore_errors=True)
     return len(outs)
+
+
+def _has_rows(f: Path, sink_format: str) -> bool:
+    """Whether one written part file holds a row: parquet and orc from
+    the footer, line formats (json/csv/text) by size — an empty task
+    writes a zero-byte file."""
+    if sink_format == "parquet":
+        import pyarrow.parquet as pq
+
+        return pq.read_metadata(f).num_rows > 0
+    if sink_format == "orc":
+        import pyarrow.orc as po
+
+        return po.ORCFile(f).nrows > 0
+    return f.stat().st_size > 0
 
 
 def _refuse_metadata_sink(sink_path: str) -> None:
@@ -1843,6 +1932,7 @@ def _plan_feed_slice(
     vs: list[int],
     max_files: int | None,
     max_bytes: int | None,
+    helper: str = "replicate_versioned_changes",
 ) -> tuple[int, int]:
     """One capped change-feed slice ``(lo, hi]``: walk the manifests —
     METADATA ONLY, O(versions in range) — accumulating each commit's
@@ -1854,14 +1944,14 @@ def _plan_feed_slice(
     bound, same as the streaming source's at-least-one-file rule,
     minus its sub-commit splitting).  Returns ``(hi, files)``; raises
     on a mid-range vacuum hole (the feed contract — a silent gap
-    would replicate wrong)."""
+    would replicate wrong), naming the calling verb ``helper``."""
     missing = [g for g in range(lo + 1, tgt + 1) if g not in vs]
     if missing:
         raise ValueError(
-            f"replicate_versioned_changes: version(s) {missing} inside "
-            f"({lo}, {tgt}] were vacuumed at {src} — their changes are "
-            "unreconstructable; replicate a gap-free range or rebuild "
-            "the replica from a snapshot"
+            f"{helper}: version(s) {missing} inside ({lo}, {tgt}] "
+            f"were vacuumed at {src} — their changes are "
+            "unreconstructable; read a gap-free range or rebuild from "
+            "a snapshot"
         )
     prev = _read_manifest(src, lo) if lo in vs else {"files": []}
     files = 0

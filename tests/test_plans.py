@@ -414,3 +414,54 @@ def test_ingest_merge_job_budget(spark, tmp_path):
     assert {r["strategy"] for r in merged.values()} == {"CREATE_TABLE"}
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == INGEST_MERGE_JOB_BUDGET
+
+
+# Spark jobs for one default-engine change-feed drain of _budget_cdf_table
+# (v1 append, v2 enable feed, v3 upsert, v4 DV delete): one slice, read
+# with read_change_feed and landed by one parquet write, the only job.  A
+# streaming drain, or any extra action per slice, breaks the budget.
+CDF_DRAIN_JOB_BUDGET = 1
+
+
+def _budget_cdf_table(spark, t):
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
+        enable_change_data_feed,
+        versioned_delete,
+        versioned_upsert,
+        versioned_write,
+    )
+
+    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
+    versioned_write(mk([(i, f"v{i}") for i in range(8)]).coalesce(2), t)
+    enable_change_data_feed(t)
+    versioned_upsert(mk([(1, "u1"), (20, "i20")]), t, ["id"])
+    versioned_delete(spark, t, "id = 3", strategy="dv")
+
+
+def test_change_feed_drain_job_budget(spark, tmp_path):
+    """A change-feed drain that needs nothing only the streaming source
+    gives runs as batch reads: an exact number of Spark jobs and no
+    streaming query."""
+    import uuid
+
+    from _spark_multi_format_data_lake_pipeline_spark.sources.versioned_stream import (
+        drain_versioned_changes,
+    )
+
+    t, out, ckpt = (str(tmp_path / n) for n in ("t", "out", "ckpt"))
+    _budget_cdf_table(spark, t)
+    group = f"cdf-drain-{uuid.uuid4().hex[:6]}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "change-feed drain job budget")
+    try:
+        runs = drain_versioned_changes(
+            spark, t, out, ckpt, extra_options={"readChangeFeed": "true"}
+        )
+        active = spark.streams.active
+    finally:
+        sc._jsc.clearJobGroup()
+    assert runs == 1
+    assert active == []
+    assert not (tmp_path / "ckpt" / "offsets").exists()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == CDF_DRAIN_JOB_BUDGET

@@ -2576,6 +2576,203 @@ def test_drain_engines_full_interleave_and_crash_recovery(
     )
 
 
+def _cdf_backlog(spark, t):
+    """v1 write (4 files), v2 enable CDF, v3 upsert, v4 DV delete, v5
+    compact: a feed of inserts, update pre/postimages and deletes,
+    ending in a commit with no change rows."""
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
+        compact,
+        enable_change_data_feed,
+        versioned_delete,
+        versioned_upsert,
+        versioned_write,
+    )
+
+    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
+    versioned_write(mk([(i, f"v{i}") for i in range(8)]).repartition(4), t)
+    enable_change_data_feed(t)
+    versioned_upsert(mk([(1, "u1"), (20, "i20")]), t, ["id"])
+    versioned_delete(spark, t, "id = 3", strategy="dv")
+    compact(spark, t)
+
+
+def _drained_feed(spark, out):
+    return sorted(
+        (r["id"], r["_change_type"], r["_commit_version"])
+        for r in spark.read.schema(
+            "id int, v string, _change_type string, _commit_version long"
+        ).parquet(out).collect()
+    )
+
+
+def test_land_slice_counts_rows_not_part_files(spark, tmp_path):
+    """An empty multi-partition frame still writes one 0-row parquet
+    part file; the slice is empty by rows, so it lands nothing, clears
+    nothing and reports 0."""
+    from _spark_multi_format_data_lake_pipeline_spark.sources.versioned_stream import (
+        _land_slice,
+    )
+
+    out = tmp_path / "sink"
+    out.mkdir()
+    full = spark.createDataFrame([(1, "a")], "id int, v string").coalesce(1)
+    assert _land_slice(full, str(out), "parquet", "slice-x-") == 1
+    before = sorted(p.name for p in out.iterdir())
+    empty = spark.createDataFrame([], "id int, v string").repartition(4)
+    assert _land_slice(empty, str(out), "parquet", "slice-x-") == 0
+    assert sorted(p.name for p in out.iterdir()) == before
+    assert _land_slice(empty, str(out), "json", "slice-j-") == 0
+    assert sorted(p.name for p in out.iterdir()) == before
+
+
+def test_stream_drain_of_compaction_only_commit_delivers_nothing(
+    spark, tmp_path
+):
+    """A streamed change-feed drain whose only new commit is a
+    compaction gets a micro-batch with no rows: it is not counted as
+    delivered and lands no slice file."""
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
+        compact,
+        enable_change_data_feed,
+        versioned_write,
+    )
+    from _spark_multi_format_data_lake_pipeline_spark.sources.versioned_stream import (
+        drain_versioned_changes,
+    )
+
+    t, out, ckpt = (str(tmp_path / n) for n in ("t", "out", "ckpt"))
+    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
+    versioned_write(mk([(i, f"v{i}") for i in range(6)]).repartition(3), t)
+    enable_change_data_feed(t)
+    cf = {"readChangeFeed": "true"}
+    assert drain_versioned_changes(
+        spark, t, out, ckpt, extra_options=cf, engine="stream"
+    ) == 1
+    files = sorted(p.name for p in (tmp_path / "out").glob("slice-*"))
+    compact(spark, t)
+    assert drain_versioned_changes(
+        spark, t, out, ckpt, extra_options=cf, engine="stream"
+    ) == 0
+    assert sorted(p.name for p in (tmp_path / "out").glob("slice-*")) == files
+
+
+def test_auto_change_feed_drain_matches_stream_drain(spark, tmp_path):
+    """The default engine drains a change feed with batch reads: it
+    lands the same (key, change type, version) multiset as the
+    streaming source, as one slice, without starting a streaming
+    query."""
+    import json as jsonlib
+
+    from _spark_multi_format_data_lake_pipeline_spark.sources.versioned_stream import (
+        drain_versioned_changes,
+    )
+
+    t = str(tmp_path / "t")
+    _cdf_backlog(spark, t)
+    cf = {"readChangeFeed": "true"}
+    a_out, a_ck = str(tmp_path / "a_out"), str(tmp_path / "a_ck")
+    s_out, s_ck = str(tmp_path / "s_out"), str(tmp_path / "s_ck")
+    assert drain_versioned_changes(spark, t, a_out, a_ck, extra_options=cf) == 1
+    drain_versioned_changes(
+        spark, t, s_out, s_ck, extra_options=cf, engine="stream"
+    )
+    got = _drained_feed(spark, a_out)
+    assert got == _drained_feed(spark, s_out)
+    assert (3, "delete", 4) in got and (1, "update_postimage", 3) in got
+    assert not (tmp_path / "a_ck" / "offsets").exists()
+    assert jsonlib.loads(
+        (tmp_path / "a_ck" / "_vc_cursor" / "cursor.json").read_text()
+    ) == {"version": 5}
+    # caught up: nothing more to deliver
+    assert drain_versioned_changes(spark, t, a_out, a_ck, extra_options=cf) == 0
+
+
+def test_auto_drain_finishes_a_partial_stream_offset_with_the_stream(
+    spark, tmp_path
+):
+    """A checkpoint left inside a commit by a capped stream drain can
+    only be finished by the stream: the default engine takes it there
+    instead of refusing, and delivers the rest of the commit once."""
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
+        versioned_write,
+    )
+    from _spark_multi_format_data_lake_pipeline_spark.sources.versioned_stream import (
+        drain_versioned_changes,
+    )
+
+    t, out, ckpt = (str(tmp_path / n) for n in ("t", "out", "ckpt"))
+    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
+    versioned_write(mk([(1, "a"), (2, "b")]).repartitionByRange(2, "id"), t)
+    cur = tmp_path / "ckpt" / "_vc_cursor"
+    cur.mkdir(parents=True)
+    (cur / "cursor.json").write_text('{"version": 1, "file_index": 1}')
+    assert drain_versioned_changes(spark, t, out, ckpt) == 1
+    assert (tmp_path / "ckpt" / "offsets").exists()
+    assert spark.read.schema("id int, v string").parquet(out).count() == 1
+
+def test_change_feed_drain_engines_interleave(spark, tmp_path):
+    """auto -> stream -> auto through one checkpoint, with commits in
+    between, lands the table's whole change feed exactly once."""
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
+        read_change_feed,
+        versioned_delete,
+        versioned_upsert,
+        versioned_write,
+    )
+    from _spark_multi_format_data_lake_pipeline_spark.sources.versioned_stream import (
+        drain_versioned_changes,
+    )
+
+    t, out, ckpt = (str(tmp_path / n) for n in ("t", "out", "ckpt"))
+    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
+    cf = {"readChangeFeed": "true"}
+    _cdf_backlog(spark, t)  # v1..v5
+    drain_versioned_changes(spark, t, out, ckpt, extra_options=cf)
+    versioned_upsert(mk([(2, "u2"), (21, "i21")]), t, ["id"])  # v6
+    versioned_write(mk([(30, "a30")]).coalesce(1), t)  # v7
+    drain_versioned_changes(
+        spark, t, out, ckpt, extra_options=cf, engine="stream"
+    )
+    versioned_delete(spark, t, "id = 21", strategy="dv")  # v8
+    assert drain_versioned_changes(spark, t, out, ckpt, extra_options=cf) == 1
+    want = sorted(
+        (r["id"], r["_change_type"], r["_commit_version"])
+        for r in read_change_feed(spark, t, 0).collect()
+    )
+    assert _drained_feed(spark, out) == want
+
+
+def test_batch_change_feed_drain_names_itself_on_vacuum_hole(spark, tmp_path):
+    """A change-feed range with vacuumed interior versions refuses, and
+    the error names the drain, not the replication verb."""
+    from _spark_multi_format_data_lake_pipeline_spark.sinks.versioned import (
+        create_tag,
+        vacuum,
+        versioned_upsert,
+        versions,
+    )
+    from _spark_multi_format_data_lake_pipeline_spark.sources.versioned_stream import (
+        drain_versioned_changes,
+    )
+
+    t, out, ckpt = (str(tmp_path / n) for n in ("t", "out", "ckpt"))
+    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
+    cf = {"readChangeFeed": "true"}
+    _cdf_backlog(spark, t)  # v1..v5
+    drain_versioned_changes(spark, t, out, ckpt, extra_options=cf)
+    versioned_upsert(mk([(4, "u4")]), t, ["id"])  # v6
+    versioned_upsert(mk([(5, "u5")]), t, ["id"])  # v7
+    create_tag(t, "keep", 5)
+    vacuum(t, keep_last=1)
+    assert versions(t) == [5, 7]
+    with pytest.raises(
+        ValueError, match=r"^drain_versioned_changes: version\(s\) \[6\]"
+    ):
+        drain_versioned_changes(
+            spark, t, out, ckpt, extra_options=cf, engine="batch"
+        )
+
+
 def test_write_tables_mid_sweep_failure_keeps_bindings(
     spark, tmp_path, monkeypatch
 ):

@@ -6414,7 +6414,8 @@ def test_branch_change_feed_fork_semantics(spark, tmp_path):
     # streaming readChangeFeed against the branch root
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     drain_versioned_changes(
-        spark, b, out, ckpt, extra_options={"readChangeFeed": "true"}
+        spark, b, out, ckpt, extra_options={"readChangeFeed": "true"},
+        engine="stream",
     )
     streamed = sorted(
         (r["id"], r["_change_type"], r["_commit_version"])
@@ -6737,3 +6738,43 @@ def test_side_job_pool_is_created_once_under_concurrent_first_use(monkeypatch):
     assert len(got) == 8
     assert len({id(p) for p in got}) == 1
     got[0].shutdown()
+
+
+def test_failed_commit_leaves_no_running_feed_job(spark, tmp_path, monkeypatch):
+    """A commit that fails after its change-feed side job was submitted
+    does not return while that job still runs, and leaves no
+    ``_change_data`` dir that no manifest references."""
+    import threading
+    import time
+
+    from _spark_multi_format_data_lake_pipeline_spark.sinks import versioned as V
+
+    t = str(tmp_path / "tbl")
+    mk = lambda rows: spark.createDataFrame(rows, "id int, v string")
+    versioned_write(mk([(i, f"v{i}") for i in range(6)]).coalesce(1), t)
+    V.enable_change_data_feed(t)
+    cdf_dirs = lambda: sorted(
+        p.name for p in (tmp_path / "tbl" / "_change_data").glob("*")
+    )
+    before = cdf_dirs()
+    running = threading.Event()
+    real_write_cdf = V._write_cdf
+
+    def slow_write_cdf(*a, **k):
+        running.set()
+        try:
+            time.sleep(1.5)  # still running when the snapshot write fails
+            return real_write_cdf(*a, **k)
+        finally:
+            running.clear()
+
+    def failing_harvest(*a, **k):
+        raise RuntimeError("simulated snapshot write failure")
+
+    monkeypatch.setattr(V, "_write_cdf", slow_write_cdf)
+    monkeypatch.setattr(V, "_harvest", failing_harvest)
+    with pytest.raises(RuntimeError, match="simulated snapshot write failure"):
+        V.versioned_upsert(mk([(1, "u1"), (9, "i9")]), t, ["id"])
+    assert not running.is_set(), "the feed side job outlived the failed commit"
+    assert cdf_dirs() == before
+    assert versions(t) == [1, 2]
